@@ -206,9 +206,13 @@ private[graft] object GlobalRank {
     // like the window's coalesce(sum(...), 0). The whole range machinery
     // below (boundary sample + exchange + pinned copy + offsets collect +
     // WindowExec) exists for histograms too wide to collect; past the
-    // gate it runs verbatim on the UNCHANGED plan.
+    // gate it runs verbatim on the UNCHANGED plan. The fold reads weights
+    // with getLong, so any other weight type takes the distributed tier
+    // at every size, as it would past the gate.
     val spineOrd =
-      if (localSpineLimit > 0) spineOrdering(df.schema(orderCol).dataType)
+      if (localSpineLimit > 0 &&
+        weights.forall { case (w, _) => df.schema(w).dataType == LongType })
+        spineOrdering(df.schema(orderCol).dataType)
       else None
     val localRows = spineOrd.map(_ => df.head(localSpineLimit.toInt + 1))
     if (localRows.isDefined && localRows.get.length <= localSpineLimit) {

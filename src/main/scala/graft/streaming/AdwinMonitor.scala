@@ -1,7 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.Dataset
 import java.sql.Timestamp
 
 /** Streaming ADWIN change detector (Bifet & Gavaldà 2007, "Learning from
@@ -26,20 +25,20 @@ import java.sql.Timestamp
   * O(M·log(W/M)) per type — bounded for any stream length. All bucket
   * sums/counts are exact longs; only the cut check floats.
   *
-  * Day rollover within the sorted micro-batch keeps emission
-  * deterministic under replay; cross-batch out-of-order days are
-  * trusted to the ingest edge (the CusumMonitor caveat class). Two
-  * explicit consequences of rollover-only emission (r15 ADVICE): the
-  * last IN-PROGRESS day per type is never emitted — it sits in state
-  * until a later day's first event closes it — so a quiesced stream
-  * holds its final day open indefinitely (slightly more consequential
-  * here than for the fixed-reference monitors, since an unclosed day
-  * also delays ADWIN's adaptive cut decision); and a cross-batch
-  * out-of-order event folds into the CURRENT open day's count rather
-  * than its own. A deployment needing prompt closure should add an
-  * event-time timeout (GroupStateTimeout.EventTimeTimeout) flushing the
-  * open day after a grace period — left out here to keep the whole
-  * monitor family's emission semantics identical and replay-exact.
+  * Days roll over on [[WindowedMonitor]]'s loop, which keeps emission
+  * deterministic under replay. Two explicit consequences of
+  * rollover-only emission (r15 ADVICE): the last IN-PROGRESS day per
+  * type is never emitted — it sits in state until a later day's first
+  * event closes it — so a quiesced stream holds its final day open
+  * indefinitely (slightly more consequential here than for the
+  * fixed-reference monitors, since an unclosed day also delays ADWIN's
+  * adaptive cut decision); and an event from an already-closed day
+  * (possible only across micro-batches) folds into the CURRENT open
+  * day's count rather than its own, so each day emits once. A
+  * deployment needing prompt closure should add an event-time timeout
+  * (GroupStateTimeout.EventTimeTimeout) flushing the open day after a
+  * grace period — left out here to keep the whole monitor family's
+  * emission semantics identical and replay-exact.
   */
 object AdwinMonitor {
 
@@ -128,38 +127,19 @@ object AdwinMonitor {
       events: Dataset[Ev],
       delta: Double = 0.01): Dataset[DayRow] = {
     require(delta > 0 && delta < 1, "confidence delta must be in (0, 1)")
-    implicit val stateEnc = Encoders.product[AdwinState]
-    implicit val outEnc = Encoders.product[DayRow]
-    events
-      .groupByKey(_.event_type)(Encoders.STRING)
-      .flatMapGroupsWithState[AdwinState, DayRow](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (tpe: String, batch: Iterator[Ev], state: GroupState[AdwinState]) =>
-          val sorted = batch.toSeq.sortBy(_.ts.getTime)
-          if (sorted.isEmpty) Iterator.empty
-          else {
-            var st = state.getOption.getOrElse(
-              AdwinState(sorted.head.ts.getTime / DayMs, 0L, Nil, Nil))
-            val out = scala.collection.mutable.ArrayBuffer.empty[DayRow]
-            def close(c: Long, day: Long, s: AdwinState): AdwinState = {
-              val (s1, c1) = compress(c :: s.sums, 1L :: s.counts)
-              val (s2, c2, cutFlag) = detect(s1, c1, delta)
-              val width = c2.sum
-              val meanBp =
-                math.floor(s2.sum.toDouble / width * 10000 + 0.5).toLong
-              out += DayRow(tpe, day, c, width, meanBp, cutFlag)
-              s.copy(sums = s2, counts = c2)
-            }
-            sorted.foreach { e =>
-              val d = e.ts.getTime / DayMs
-              if (d != st.day) {
-                val closed = close(st.n, st.day, st)
-                st = closed.copy(day = d, n = 1L)
-              } else st = st.copy(n = st.n + 1)
-            }
-            state.update(st)
-            out.iterator
-          }
-      }
+    WindowedMonitor.run(events, DayMs)(_.event_type, _.ts)(
+      new WindowedMonitor.Stat[Ev, AdwinState, DayRow] {
+        def open(day: Long) = AdwinState(day, 0L, Nil, Nil)
+        def window(s: AdwinState) = s.day
+        def add(s: AdwinState, e: Ev) = s.copy(n = s.n + 1)
+        def roll(tpe: String, s: AdwinState, day: Long, emit: DayRow => Unit) = {
+          val (s1, c1) = compress(s.n :: s.sums, 1L :: s.counts)
+          val (s2, c2, cutFlag) = detect(s1, c1, delta)
+          val width = c2.sum
+          val meanBp = math.floor(s2.sum.toDouble / width * 10000 + 0.5).toLong
+          emit(DayRow(tpe, s.day, s.n, width, meanBp, cutFlag))
+          AdwinState(day, 0L, s2, c2)
+        }
+      })
   }
 }

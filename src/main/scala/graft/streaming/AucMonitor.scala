@@ -1,7 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.Dataset
 import java.sql.Timestamp
 
 /** Streaming ROC-AUC monitor — the live twin of
@@ -31,8 +30,8 @@ import java.sql.Timestamp
   *
   * Like [[CusumMonitor]] and [[ConformalMonitor]], the frame of
   * reference (score range, bin count, AUC floor) is CALLER-SUPPLIED from
-  * the batch side; event-time window rollover inside the sorted
-  * micro-batch keeps emission deterministic under replay. The cumulative
+  * the batch side; windows roll over on [[WindowedMonitor]]'s loop,
+  * which keeps emission deterministic under replay. The cumulative
   * AUC rides the same histogram — histograms are mergeable, so the
   * since-start statistic costs no extra state class.
   */
@@ -75,52 +74,33 @@ object AucMonitor {
     require(scoreMax > scoreMin, "need scoreMax > scoreMin")
     require(windowMs > 0, "windowMs must be positive")
     val width = (scoreMax - scoreMin) / bins
-    implicit val stateEnc = Encoders.product[HistState]
-    implicit val outEnc = Encoders.product[WinRow]
-    events
-      .groupByKey(_.source)(Encoders.STRING)
-      .flatMapGroupsWithState[HistState, WinRow](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (src: String, batch: Iterator[Scored], state: GroupState[HistState]) =>
-          val sorted = batch.toSeq.sortBy(_.ts.getTime)
-          if (sorted.isEmpty) Iterator.empty
-          else {
-            val zero = Vector.fill(bins)(0L)
-            var st = state.getOption.getOrElse(
-              HistState(sorted.head.ts.getTime / windowMs, zero, zero, zero, zero))
-            val out = scala.collection.mutable.ArrayBuffer.empty[WinRow]
-            def close(s: HistState): Unit = {
-              val p = s.pos.sum
-              val n = s.neg.sum
-              if (p + n > 0) {
-                val auc = histAuc(s.pos, s.neg)
-                out += WinRow(src, s.win * windowMs, p, n, auc,
-                  histAuc(s.cumPos, s.cumNeg),
-                  // a single-class window can't witness separation loss
-                  !auc.isNaN && auc < aucFloor)
-              }
-            }
-            sorted.foreach { e =>
-              val w = e.ts.getTime / windowMs
-              // an out-of-order event across micro-batches (w < st.win) CLAMPS into
-              // the current window: a close-and-reopen here would emit duplicate
-              // window_start rows and split one window's counts across two emissions
-              if (w > st.win) {
-                close(st)
-                st = HistState(w, zero, zero, st.cumPos, st.cumNeg)
-              }
-              val b = math.min(bins - 1,
-                math.max(0, math.floor((e.score - scoreMin) / width).toInt))
-              if (e.label)
-                st = st.copy(pos = st.pos.updated(b, st.pos(b) + 1L),
-                  cumPos = st.cumPos.updated(b, st.cumPos(b) + 1L))
-              else
-                st = st.copy(neg = st.neg.updated(b, st.neg(b) + 1L),
-                  cumNeg = st.cumNeg.updated(b, st.cumNeg(b) + 1L))
-            }
-            state.update(st)
-            out.iterator
+    WindowedMonitor.run(events, windowMs)(_.source, _.ts)(
+      new WindowedMonitor.Stat[Scored, HistState, WinRow] {
+        private val zero = Vector.fill(bins)(0L)
+        def open(w: Long) = HistState(w, zero, zero, zero, zero)
+        def window(s: HistState) = s.win
+        def add(s: HistState, e: Scored) = {
+          val b = math.min(bins - 1,
+            math.max(0, math.floor((e.score - scoreMin) / width).toInt))
+          if (e.label)
+            s.copy(pos = s.pos.updated(b, s.pos(b) + 1L),
+              cumPos = s.cumPos.updated(b, s.cumPos(b) + 1L))
+          else
+            s.copy(neg = s.neg.updated(b, s.neg(b) + 1L),
+              cumNeg = s.cumNeg.updated(b, s.cumNeg(b) + 1L))
+        }
+        def roll(src: String, s: HistState, w: Long, emit: WinRow => Unit) = {
+          val p = s.pos.sum
+          val n = s.neg.sum
+          if (p + n > 0) {
+            val auc = histAuc(s.pos, s.neg)
+            emit(WinRow(src, s.win * windowMs, p, n, auc,
+              histAuc(s.cumPos, s.cumNeg),
+              // a single-class window can't witness separation loss
+              !auc.isNaN && auc < aucFloor))
           }
-      }
+          HistState(w, zero, zero, s.cumPos, s.cumNeg)
+        }
+      })
   }
 }

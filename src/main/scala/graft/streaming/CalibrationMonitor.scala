@@ -1,7 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.Dataset
 import java.sql.Timestamp
 
 /** Streaming calibration monitor — the live twin of
@@ -26,7 +25,8 @@ import java.sql.Timestamp
   * side (the batch-calibrates/stream-monitors division).
   *
   * State is O(sources × bins) counters — never events; cumulative
-  * counters ride along for the since-start ECE.
+  * counters ride along for the since-start ECE. Rows with den <= 0 are
+  * dropped before the [[WindowedMonitor]] loop.
   */
 object CalibrationMonitor extends Serializable {
 
@@ -64,8 +64,6 @@ object CalibrationMonitor extends Serializable {
       windowMs: Long = 3600000L): Dataset[WinRow] = {
     require(bins >= 2 && bins <= 10000, "2 <= bins <= 10000")
     require(eceCeilingBp >= 0 && windowMs > 0, "ceiling >= 0, window > 0")
-    implicit val stateEnc = Encoders.product[BinsState]
-    implicit val outEnc = Encoders.product[WinRow]
     // the batch summary's sorted-bin ECE fold and Brier mean
     def ece(n: Seq[Long], nPos: Seq[Long], s20: Seq[Long]): Long = {
       val total = n.sum
@@ -81,55 +79,35 @@ object CalibrationMonitor extends Serializable {
       }
       bp(acc)
     }
-    events
-      .groupByKey(_.source)(Encoders.STRING)
-      .flatMapGroupsWithState[BinsState, WinRow](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (src: String, batch: Iterator[Pred], state: GroupState[BinsState]) =>
-          val sorted = batch.toSeq.sortBy(_.ts.getTime)
-          val valid = sorted.filter(_.den > 0)
-          if (valid.isEmpty) Iterator.empty
-          else {
-            val zero = Vector.fill(bins)(0L)
-            var st = state.getOption.getOrElse(
-              BinsState(valid.head.ts.getTime / windowMs,
-                zero, zero, zero, zero, zero, zero, zero, zero))
-            val out = scala.collection.mutable.ArrayBuffer.empty[WinRow]
-            def close(s: BinsState): Unit = {
-              val total = s.n.sum
-              if (total > 0) {
-                val e = ece(s.n, s.nPos, s.s20)
-                out += WinRow(src, s.win * windowMs, total, s.nPos.sum, e,
-                  bp(s.b20.sum.toDouble / (total.toDouble * 1048576.0)),
-                  ece(s.cumN, s.cumNPos, s.cumS20),
-                  e >= eceCeilingBp)
-              }
-            }
-            valid.foreach { p =>
-              val w = p.ts.getTime / windowMs
-              // an out-of-order event across micro-batches (w < st.win) CLAMPS into
-              // the current window: a close-and-reopen here would emit duplicate
-              // window_start rows and split one window's counts across two emissions
-              if (w > st.win) {
-                close(st)
-                st = BinsState(w, zero, zero, zero, zero,
-                  st.cumN, st.cumNPos, st.cumS20, st.cumB20)
-              }
-              val (b, s20, b20) = rowTerms(p.num, p.den, p.label, bins)
-              val pos = if (p.label) 1L else 0L
-              st = st.copy(
-                n = st.n.updated(b, st.n(b) + 1L),
-                nPos = st.nPos.updated(b, st.nPos(b) + pos),
-                s20 = st.s20.updated(b, st.s20(b) + s20),
-                b20 = st.b20.updated(b, st.b20(b) + b20),
-                cumN = st.cumN.updated(b, st.cumN(b) + 1L),
-                cumNPos = st.cumNPos.updated(b, st.cumNPos(b) + pos),
-                cumS20 = st.cumS20.updated(b, st.cumS20(b) + s20),
-                cumB20 = st.cumB20.updated(b, st.cumB20(b) + b20))
-            }
-            state.update(st)
-            out.iterator
+    WindowedMonitor.run(events.filter(_.den > 0), windowMs)(_.source, _.ts)(
+      new WindowedMonitor.Stat[Pred, BinsState, WinRow] {
+        private val zero = Vector.fill(bins)(0L)
+        def open(w: Long) = BinsState(w, zero, zero, zero, zero, zero, zero, zero, zero)
+        def window(s: BinsState) = s.win
+        def add(s: BinsState, p: Pred) = {
+          val (b, s20, b20) = rowTerms(p.num, p.den, p.label, bins)
+          val pos = if (p.label) 1L else 0L
+          s.copy(
+            n = s.n.updated(b, s.n(b) + 1L),
+            nPos = s.nPos.updated(b, s.nPos(b) + pos),
+            s20 = s.s20.updated(b, s.s20(b) + s20),
+            b20 = s.b20.updated(b, s.b20(b) + b20),
+            cumN = s.cumN.updated(b, s.cumN(b) + 1L),
+            cumNPos = s.cumNPos.updated(b, s.cumNPos(b) + pos),
+            cumS20 = s.cumS20.updated(b, s.cumS20(b) + s20),
+            cumB20 = s.cumB20.updated(b, s.cumB20(b) + b20))
+        }
+        def roll(src: String, s: BinsState, w: Long, emit: WinRow => Unit) = {
+          val total = s.n.sum
+          if (total > 0) {
+            val e = ece(s.n, s.nPos, s.s20)
+            emit(WinRow(src, s.win * windowMs, total, s.nPos.sum, e,
+              bp(s.b20.sum.toDouble / (total.toDouble * 1048576.0)),
+              ece(s.cumN, s.cumNPos, s.cumS20),
+              e >= eceCeilingBp))
           }
-      }
+          BinsState(w, zero, zero, zero, zero, s.cumN, s.cumNPos, s.cumS20, s.cumB20)
+        }
+      })
   }
 }

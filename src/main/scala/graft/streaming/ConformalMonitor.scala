@@ -1,7 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.Dataset
 import java.sql.Timestamp
 
 /** Streaming conformal-coverage monitor — the live twin of
@@ -24,12 +23,11 @@ import java.sql.Timestamp
   * identical inputs (spec-pinned against a batch recount on the same
   * window).
   *
-  * Event-time window rollover within the sorted micro-batch keeps
-  * emission deterministic under replay; windows arriving out of order
-  * across batches are trusted to the ingest edge's ordering (the
-  * TransitionMonitor caveat class). State is one small case class per
-  * source — the stream never buffers events, only counters, so state is
-  * O(sources) regardless of throughput.
+  * Windows roll over on [[WindowedMonitor]]'s loop (event-time order
+  * within a micro-batch; a late event across batches folds into the open
+  * window). State is one small case class per source — the stream never
+  * buffers events, only counters, so state is O(sources) regardless of
+  * throughput.
   */
 object ConformalMonitor {
 
@@ -52,42 +50,23 @@ object ConformalMonitor {
       tolerance: Double = 0.05): Dataset[WinRow] = {
     require(windowMs > 0, "windowMs must be positive")
     require(target > 0 && target < 1, "target coverage in (0,1)")
-    implicit val stateEnc = Encoders.product[WinState]
-    implicit val outEnc = Encoders.product[WinRow]
-    events
-      .groupByKey(_.source)(Encoders.STRING)
-      .flatMapGroupsWithState[WinState, WinRow](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (src: String, batch: Iterator[Pred], state: GroupState[WinState]) =>
-          val sorted = batch.toSeq.sortBy(_.ts.getTime)
-          if (sorted.isEmpty) Iterator.empty
-          else {
-            var st = state.getOption.getOrElse(
-              WinState(sorted.head.ts.getTime / windowMs, 0L, 0L, 0L, 0L))
-            val out = scala.collection.mutable.ArrayBuffer.empty[WinRow]
-            def close(s: WinState): Unit = if (s.n > 0) {
-              val cov = s.covered.toDouble / s.n
-              out += WinRow(src, s.win * windowMs, s.n, s.covered, cov,
-                s.cumCovered.toDouble / s.cumN, cov < target - tolerance)
-            }
-            sorted.foreach { e =>
-              val w = e.ts.getTime / windowMs
-              // an out-of-order event across micro-batches (w < st.win) CLAMPS into
-              // the current window: a close-and-reopen here would emit duplicate
-              // window_start rows and split one window's counts across two emissions
-              if (w > st.win) {
-                close(st)
-                st = WinState(w, 0L, 0L, st.cumN, st.cumCovered)
-              }
-              // term-for-term the batch eval predicate: |y − (a + b·x)| ≤ q̂
-              val hit = if (math.abs(e.y - (intercept + slope * e.x)) <= qHat) 1L else 0L
-              st = st.copy(
-                n = st.n + 1L, covered = st.covered + hit,
-                cumN = st.cumN + 1L, cumCovered = st.cumCovered + hit)
-            }
-            state.update(st)
-            out.iterator
+    WindowedMonitor.run(events, windowMs)(_.source, _.ts)(
+      new WindowedMonitor.Stat[Pred, WinState, WinRow] {
+        def open(w: Long) = WinState(w, 0L, 0L, 0L, 0L)
+        def window(s: WinState) = s.win
+        def add(s: WinState, e: Pred) = {
+          // term-for-term the batch eval predicate: |y − (a + b·x)| ≤ q̂
+          val hit = if (math.abs(e.y - (intercept + slope * e.x)) <= qHat) 1L else 0L
+          WinState(s.win, s.n + 1L, s.covered + hit, s.cumN + 1L, s.cumCovered + hit)
+        }
+        def roll(src: String, s: WinState, w: Long, emit: WinRow => Unit) = {
+          if (s.n > 0) {
+            val cov = s.covered.toDouble / s.n
+            emit(WinRow(src, s.win * windowMs, s.n, s.covered, cov,
+              s.cumCovered.toDouble / s.cumN, cov < target - tolerance))
           }
-      }
+          WinState(w, 0L, 0L, s.cumN, s.cumCovered)
+        }
+      })
   }
 }

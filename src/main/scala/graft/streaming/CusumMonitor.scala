@@ -1,7 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.Dataset
 import java.sql.Timestamp
 
 /** Streaming CUSUM level-shift monitor — the live twin of
@@ -16,11 +15,11 @@ import java.sql.Timestamp
   * it hasn't seen yet — that difference is the point of the pairing, and
   * the batch operator is where the reference gets fitted.
   *
-  * Event-time day rollover within the sorted micro-batch keeps the
-  * emission deterministic under replay; days arriving out of order
-  * across batches are trusted to the ingest edge's ordering (the
-  * TransitionMonitor caveat class). State is one small case class per
-  * type.
+  * Days roll over on [[WindowedMonitor]]'s loop: event-time order
+  * within each micro-batch keeps emission deterministic under replay,
+  * and an event from an already-closed day (possible only across
+  * micro-batches) folds into the open day, so each day emits once.
+  * State is one small case class per type.
   */
 object CusumMonitor {
 
@@ -36,37 +35,17 @@ object CusumMonitor {
       events: Dataset[Ev],
       mu: Double,
       slack: Double,
-      threshold: Double): Dataset[DayRow] = {
-    implicit val stateEnc = Encoders.product[SumState]
-    implicit val outEnc = Encoders.product[DayRow]
-    events
-      .groupByKey(_.event_type)(Encoders.STRING)
-      .flatMapGroupsWithState[SumState, DayRow](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (tpe: String, batch: Iterator[Ev], state: GroupState[SumState]) =>
-          val sorted = batch.toSeq.sortBy(_.ts.getTime)
-          if (sorted.isEmpty) Iterator.empty
-          else {
-            var st = state.getOption.getOrElse(
-              SumState(sorted.head.ts.getTime / DayMs, 0L, 0.0, 0.0))
-            val out = scala.collection.mutable.ArrayBuffer.empty[DayRow]
-            def close(c: Long, day: Long, sUp0: Double, sDown0: Double): (Double, Double) = {
-              val su = math.max(0.0, sUp0 + (c - mu - slack))
-              val sd = math.max(0.0, sDown0 + (mu - c - slack))
-              out += DayRow(tpe, day, c, su, sd,
-                su > threshold || sd > threshold)
-              (su, sd)
-            }
-            sorted.foreach { e =>
-              val d = e.ts.getTime / DayMs
-              if (d != st.day) {
-                val (su, sd) = close(st.n, st.day, st.sUp, st.sDown)
-                st = SumState(d, 1L, su, sd)
-              } else st = st.copy(n = st.n + 1)
-            }
-            state.update(st)
-            out.iterator
-          }
-      }
-  }
+      threshold: Double): Dataset[DayRow] =
+    WindowedMonitor.run(events, DayMs)(_.event_type, _.ts)(
+      new WindowedMonitor.Stat[Ev, SumState, DayRow] {
+        def open(day: Long) = SumState(day, 0L, 0.0, 0.0)
+        def window(s: SumState) = s.day
+        def add(s: SumState, e: Ev) = s.copy(n = s.n + 1)
+        def roll(tpe: String, s: SumState, day: Long, emit: DayRow => Unit) = {
+          val su = math.max(0.0, s.sUp + (s.n - mu - slack))
+          val sd = math.max(0.0, s.sDown + (mu - s.n - slack))
+          emit(DayRow(tpe, s.day, s.n, su, sd, su > threshold || sd > threshold))
+          SumState(day, 0L, su, sd)
+        }
+      })
 }

@@ -1,7 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.Dataset
 import java.sql.Timestamp
 
 /** Streaming corpus-drift monitor — the live twin of
@@ -27,13 +26,12 @@ import java.sql.Timestamp
   * driver and ride the closure as an O(buckets) array.
   *
   * State is O(sources × buckets) counters — never tokens, never
-  * documents; the cumulative JS rides the same mergeable histogram.
+  * documents; the cumulative JS rides the same mergeable histogram. The
+  * window loop and the binned state are [[WindowedMonitor]]'s.
   */
 object DriftMonitor extends Serializable {
 
   final case class Doc(source: String, ts: Timestamp, text: String)
-
-  final case class HistState(win: Long, counts: Seq[Long], cumCounts: Seq[Long])
 
   final case class WinRow(
       source: String, window_start: Long, n_tokens: Long,
@@ -91,49 +89,11 @@ object DriftMonitor extends Serializable {
       }
       round4(sa / 2 + sb / 2)
     }
-    implicit val stateEnc = Encoders.product[HistState]
-    implicit val outEnc = Encoders.product[WinRow]
-    events
-      .groupByKey(_.source)(Encoders.STRING)
-      .flatMapGroupsWithState[HistState, WinRow](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (src: String, batch: Iterator[Doc], state: GroupState[HistState]) =>
-          val sorted = batch.toSeq.sortBy(_.ts.getTime)
-          if (sorted.isEmpty) Iterator.empty
-          else {
-            val zero = Vector.fill(buckets)(0L)
-            var st = state.getOption.getOrElse(
-              HistState(sorted.head.ts.getTime / windowMs, zero, zero))
-            val out = scala.collection.mutable.ArrayBuffer.empty[WinRow]
-            def close(s: HistState): Unit = {
-              val n = s.counts.sum
-              if (n > 0) {
-                val j = js(s.counts)
-                out += WinRow(src, s.win * windowMs, n, j, js(s.cumCounts),
-                  j > jsCeiling)
-              }
-            }
-            sorted.foreach { e =>
-              val w = e.ts.getTime / windowMs
-              // an out-of-order event across micro-batches (w < st.win) CLAMPS into
-              // the current window: a close-and-reopen here would emit duplicate
-              // window_start rows and split one window's counts across two emissions
-              if (w > st.win) {
-                close(st)
-                st = HistState(w, zero, st.cumCounts)
-              }
-              var cs = st.counts
-              var cc = st.cumCounts
-              tokensOf(e.text).foreach { t =>
-                val b = bucketOf(t, buckets)
-                cs = cs.updated(b, cs(b) + 1L)
-                cc = cc.updated(b, cc(b) + 1L)
-              }
-              st = st.copy(counts = cs, cumCounts = cc)
-            }
-            state.update(st)
-            out.iterator
-          }
-      }
+    WindowedMonitor.run(events, windowMs)(_.source, _.ts)(
+      WindowedMonitor.binned[Doc, WinRow](buckets)(
+        e => tokensOf(e.text).iterator.map(bucketOf(_, buckets))) { (src, s, n) =>
+        val j = js(s.counts)
+        WinRow(src, s.win * windowMs, n, j, js(s.cumCounts), j > jsCeiling)
+      })
   }
 }

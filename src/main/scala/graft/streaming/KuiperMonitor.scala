@@ -1,7 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.Dataset
 import java.sql.Timestamp
 
 /** Streaming two-sample Kuiper monitor — the live twin of
@@ -14,8 +13,8 @@ import java.sql.Timestamp
   * growing a high spike — trips the live alarm KS undersells.
   *
   * Mechanics are [[KsMonitor]]'s verbatim (same Scored input, same
-  * caller-supplied cuts + reference histogram, same O(sources × bins)
-  * counter state, same window rollover/out-of-order clamping), with the
+  * caller-supplied cuts + reference histogram, the same
+  * [[WindowedMonitor]] loop and O(sources × bins) binned state), with the
   * supremum split into its SIGNED one-sided integer cross-mass maxes
   * (clamped at zero — an excursion that never goes positive contributes
   * nothing, the batch operator's convention) before the one division and
@@ -25,8 +24,6 @@ import java.sql.Timestamp
 object KuiperMonitor extends Serializable {
 
   final case class Scored(source: String, ts: Timestamp, value: Double)
-
-  final case class HistState(win: Long, counts: Seq[Long], cumCounts: Seq[Long])
 
   final case class WinRow(
       source: String, window_start: Long, n_events: Long,
@@ -39,14 +36,9 @@ object KuiperMonitor extends Serializable {
       vCeiling: Double,
       windowMs: Long = 3600000L): Dataset[WinRow] = {
     val bins = refCounts.length
-    require(bins > 1 && cuts.length == bins - 1,
-      "need B >= 2 reference bins and B-1 cutpoints")
-    require(cuts.zip(cuts.tail).forall { case (a, b) => a <= b },
-      "cutpoints must be non-decreasing")
-    require(refCounts.forall(_ >= 0) && refCounts.sum > 0,
-      "reference histogram must be non-negative with positive mass")
+    WindowedMonitor.requireCutBins(cuts, refCounts)
     require(vCeiling > 0 && windowMs > 0, "positive ceiling and window")
-    val cutsArr = cuts.toArray
+    val cutsIx = cuts.toIndexedSeq
     val nRef: Long = refCounts.sum
     val cumRef: Array[Long] = refCounts.scanLeft(0L)(_ + _).tail.toArray
     // the batch suprema on a window histogram: SIGNED integer
@@ -68,45 +60,11 @@ object KuiperMonitor extends Serializable {
       val v = (dPlus + dMinus).toDouble / (nRef.toDouble * nCur.toDouble)
       math.floor(v * 10000 + 0.5) / 10000
     }
-    implicit val stateEnc = Encoders.product[HistState]
-    implicit val outEnc = Encoders.product[WinRow]
-    events
-      .groupByKey(_.source)(Encoders.STRING)
-      .flatMapGroupsWithState[HistState, WinRow](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (src: String, batch: Iterator[Scored], state: GroupState[HistState]) =>
-          val sorted = batch.toSeq.sortBy(_.ts.getTime)
-          if (sorted.isEmpty) Iterator.empty
-          else {
-            val zero = Vector.fill(bins)(0L)
-            var st = state.getOption.getOrElse(
-              HistState(sorted.head.ts.getTime / windowMs, zero, zero))
-            val out = scala.collection.mutable.ArrayBuffer.empty[WinRow]
-            def close(s: HistState): Unit = {
-              val n = s.counts.sum
-              if (n > 0) {
-                val v = vOf(s.counts)
-                out += WinRow(src, s.win * windowMs, n, v, vOf(s.cumCounts),
-                  v > vCeiling)
-              }
-            }
-            sorted.foreach { e =>
-              val w = e.ts.getTime / windowMs
-              // out-of-order across micro-batches clamps into the current
-              // window (the KsMonitor convention — close-and-reopen would
-              // emit duplicate window_start rows)
-              if (w > st.win) {
-                close(st)
-                st = HistState(w, zero, st.cumCounts)
-              }
-              val b = ScoreDriftMonitor.binOf(e.value, cutsArr)
-              st = st.copy(
-                counts = st.counts.updated(b, st.counts(b) + 1L),
-                cumCounts = st.cumCounts.updated(b, st.cumCounts(b) + 1L))
-            }
-            state.update(st)
-            out.iterator
-          }
-      }
+    WindowedMonitor.run(events, windowMs)(_.source, _.ts)(
+      WindowedMonitor.binned[Scored, WinRow](bins)(
+        e => Iterator.single(ScoreDriftMonitor.binOf(e.value, cutsIx))) { (src, s, n) =>
+        val v = vOf(s.counts)
+        WinRow(src, s.win * windowMs, n, v, vOf(s.cumCounts), v > vCeiling)
+      })
   }
 }

@@ -13,13 +13,16 @@ import org.apache.spark.sql.functions._
   * calibration prefix and a monitored remainder (the X214–X227
   * division: batch calibrates, stream monitors), fits the monitor's
   * caller-supplied reference from the prefix with one distributed
-  * aggregate, then drives the REAL streaming operator — the same
-  * `flatMapGroupsWithState` plan production runs — over the remainder
-  * through a MemoryStream, one micro-batch, `processAllAvailable`.
-  * Emission is deterministic: every monitor assigns state windows from
-  * EVENT time, all four fold order-insensitively within a window
-  * (histogram / moment / count buckets commute), and only closed
-  * windows emit — per source, every day but its last.
+  * aggregate, then drives the REAL streaming operator — the same plan
+  * production runs — over the remainder through a MemoryStream, one
+  * micro-batch, `processAllAvailable`. Fifteen of the seventeen replays
+  * (q302–q316) drive monitors on the shared [[WindowedMonitor]] loop;
+  * q317 drives [[QualityMonitor]]'s watermark aggregation and q318
+  * [[TransitionMonitor]]'s pair state. Emission is deterministic: every
+  * windowed monitor assigns state windows from EVENT time, each of the
+  * fifteen folds order-insensitively within a window (histogram /
+  * moment / count buckets commute), and only closed windows emit — per
+  * source, every day but its last.
   *
   * The DuckDB oracle replays the whole composition in SQL (the q300
   * composed-oracle technique): the same day split, the same reference
@@ -526,9 +529,11 @@ object MonitorReplay {
 
   /** Like [[runStream]], but feeds the rows as MULTIPLE micro-batches
     * (processAllAvailable between adds) — for replays that must pin
-    * CROSS-BATCH state bridging, not just the within-batch fold.
+    * CROSS-BATCH state bridging, not just the within-batch fold. The
+    * monitor specs share it as their stream harness; it drops the temp
+    * view it registers.
     */
-  private def runStreamBatches[I: org.apache.spark.sql.Encoder, O: org.apache.spark.sql.Encoder](
+  private[graft] def runStreamBatches[I: org.apache.spark.sql.Encoder, O: org.apache.spark.sql.Encoder](
       spark: SparkSession,
       batches: Seq[Seq[I]],
       mon: org.apache.spark.sql.Dataset[I] => org.apache.spark.sql.Dataset[O]): Seq[O] = {

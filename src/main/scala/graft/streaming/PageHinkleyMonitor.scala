@@ -1,7 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.Dataset
 import java.sql.Timestamp
 
 /** Streaming Page–Hinkley mean-drift monitor (Page 1954's cumulative
@@ -23,11 +22,10 @@ import java.sql.Timestamp
   *
   * As in [[CusumMonitor]], μ/δ/λ are CALLER-SUPPLIED reference
   * parameters fitted on the batch side — a stream cannot use the
-  * in-sample mean it hasn't seen yet. Event-time day rollover within
-  * the sorted micro-batch keeps emission deterministic under replay;
-  * days arriving out of order across batches are trusted to the ingest
-  * edge's ordering (the TransitionMonitor caveat class). State is one
-  * small case class per type.
+  * in-sample mean it hasn't seen yet. Days roll over on
+  * [[WindowedMonitor]]'s loop, so an event from an already-closed day
+  * folds into the open day and each day emits once. State is one small
+  * case class per type.
   */
 object PageHinkleyMonitor {
 
@@ -45,41 +43,22 @@ object PageHinkleyMonitor {
       events: Dataset[Ev],
       mu: Double,
       delta: Double,
-      lambda: Double): Dataset[DayRow] = {
-    implicit val stateEnc = Encoders.product[PhState]
-    implicit val outEnc = Encoders.product[DayRow]
-    events
-      .groupByKey(_.event_type)(Encoders.STRING)
-      .flatMapGroupsWithState[PhState, DayRow](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (tpe: String, batch: Iterator[Ev], state: GroupState[PhState]) =>
-          val sorted = batch.toSeq.sortBy(_.ts.getTime)
-          if (sorted.isEmpty) Iterator.empty
-          else {
-            var st = state.getOption.getOrElse(
-              PhState(sorted.head.ts.getTime / DayMs, 0L, 0.0, 0.0, 0.0, 0.0))
-            val out = scala.collection.mutable.ArrayBuffer.empty[DayRow]
-            def close(c: Long, day: Long, s: PhState): PhState = {
-              // the empty prefix m_0 = 0 participates in the minimum —
-              // the state's mins start at 0 and only ever decrease
-              val mu2 = s.mUp + (c - mu - delta)
-              val mnU = math.min(s.minUp, mu2)
-              val md2 = s.mDown + (mu - c - delta)
-              val mnD = math.min(s.minDown, md2)
-              out += DayRow(tpe, day, c, mu2 - mnU, md2 - mnD,
-                mu2 - mnU > lambda || md2 - mnD > lambda)
-              s.copy(mUp = mu2, minUp = mnU, mDown = md2, minDown = mnD)
-            }
-            sorted.foreach { e =>
-              val d = e.ts.getTime / DayMs
-              if (d != st.day) {
-                val closed = close(st.n, st.day, st)
-                st = closed.copy(day = d, n = 1L)
-              } else st = st.copy(n = st.n + 1)
-            }
-            state.update(st)
-            out.iterator
-          }
-      }
-  }
+      lambda: Double): Dataset[DayRow] =
+    WindowedMonitor.run(events, DayMs)(_.event_type, _.ts)(
+      new WindowedMonitor.Stat[Ev, PhState, DayRow] {
+        def open(day: Long) = PhState(day, 0L, 0.0, 0.0, 0.0, 0.0)
+        def window(s: PhState) = s.day
+        def add(s: PhState, e: Ev) = s.copy(n = s.n + 1)
+        def roll(tpe: String, s: PhState, day: Long, emit: DayRow => Unit) = {
+          // the empty prefix m_0 = 0 participates in the minimum —
+          // the state's mins start at 0 and only ever decrease
+          val mu2 = s.mUp + (s.n - mu - delta)
+          val mnU = math.min(s.minUp, mu2)
+          val md2 = s.mDown + (mu - s.n - delta)
+          val mnD = math.min(s.minDown, md2)
+          emit(DayRow(tpe, s.day, s.n, mu2 - mnU, md2 - mnD,
+            mu2 - mnU > lambda || md2 - mnD > lambda))
+          PhState(day, 0L, mu2, mnU, md2, mnD)
+        }
+      })
 }

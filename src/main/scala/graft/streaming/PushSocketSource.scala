@@ -228,8 +228,12 @@ final class PushSocketMicroBatchStream(
       case _: IllegalArgumentException => // ZMTP violation: drop the peer
     } finally client.close()
 
+  /** The queue bound counts only frames not yet released to a batch: a
+    * finished batch's frames stay buffered until the next batch commits
+    * them, and must not take room from new frames meanwhile.
+    */
   private def admit(frame: String): Unit = lock.synchronized {
-    if (buffer.size >= maxQueue) PushSocketSource.countDrop(name)
+    if (baseOffset + buffer.size - exposed >= maxQueue) PushSocketSource.countDrop(name)
     else {
       buffer += UTF8String.fromString(frame)
       times += System.currentTimeMillis()

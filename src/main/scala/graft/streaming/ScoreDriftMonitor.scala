@@ -1,7 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.Dataset
 import java.sql.Timestamp
 
 /** Streaming numeric score-drift monitor — the live twin of
@@ -26,13 +25,12 @@ import java.sql.Timestamp
   * on the driver and ride the closure as an O(bins) array.
   *
   * State is O(sources × bins) counters — never events; the cumulative
-  * PSI rides the same mergeable histogram.
+  * PSI rides the same mergeable histogram. The window loop and the
+  * binned state are [[WindowedMonitor]]'s.
   */
 object ScoreDriftMonitor extends Serializable {
 
   final case class Scored(source: String, ts: Timestamp, value: Double)
-
-  final case class HistState(win: Long, counts: Seq[Long], cumCounts: Seq[Long])
 
   final case class WinRow(
       source: String, window_start: Long, n_events: Long,
@@ -56,14 +54,9 @@ object ScoreDriftMonitor extends Serializable {
       psiCeiling: Double,
       windowMs: Long = 3600000L): Dataset[WinRow] = {
     val bins = refCounts.length
-    require(bins > 1 && cuts.length == bins - 1,
-      "need B >= 2 reference bins and B-1 cutpoints")
-    require(cuts.zip(cuts.tail).forall { case (a, b) => a <= b },
-      "cutpoints must be non-decreasing")
-    require(refCounts.forall(_ >= 0) && refCounts.sum > 0,
-      "reference histogram must be non-negative with positive mass")
+    WindowedMonitor.requireCutBins(cuts, refCounts)
     require(psiCeiling > 0 && windowMs > 0, "positive ceiling and window")
-    val cutsArr = cuts.toArray
+    val cutsIx = cuts.toIndexedSeq
     // add-1 smoothed reference probabilities, precomputed once: the
     // batch operator's pr = (cr + 1) / (nr + bins)
     val nr = refCounts.sum
@@ -82,45 +75,11 @@ object ScoreDriftMonitor extends Serializable {
       }
       round4(s)
     }
-    implicit val stateEnc = Encoders.product[HistState]
-    implicit val outEnc = Encoders.product[WinRow]
-    events
-      .groupByKey(_.source)(Encoders.STRING)
-      .flatMapGroupsWithState[HistState, WinRow](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (src: String, batch: Iterator[Scored], state: GroupState[HistState]) =>
-          val sorted = batch.toSeq.sortBy(_.ts.getTime)
-          if (sorted.isEmpty) Iterator.empty
-          else {
-            val zero = Vector.fill(bins)(0L)
-            var st = state.getOption.getOrElse(
-              HistState(sorted.head.ts.getTime / windowMs, zero, zero))
-            val out = scala.collection.mutable.ArrayBuffer.empty[WinRow]
-            def close(s: HistState): Unit = {
-              val n = s.counts.sum
-              if (n > 0) {
-                val p = psi(s.counts)
-                out += WinRow(src, s.win * windowMs, n, p, psi(s.cumCounts),
-                  p > psiCeiling)
-              }
-            }
-            sorted.foreach { e =>
-              val w = e.ts.getTime / windowMs
-              // an out-of-order event across micro-batches (w < st.win) CLAMPS into
-              // the current window: a close-and-reopen here would emit duplicate
-              // window_start rows and split one window's counts across two emissions
-              if (w > st.win) {
-                close(st)
-                st = HistState(w, zero, st.cumCounts)
-              }
-              val b = binOf(e.value, cutsArr)
-              st = st.copy(
-                counts = st.counts.updated(b, st.counts(b) + 1L),
-                cumCounts = st.cumCounts.updated(b, st.cumCounts(b) + 1L))
-            }
-            state.update(st)
-            out.iterator
-          }
-      }
+    WindowedMonitor.run(events, windowMs)(_.source, _.ts)(
+      WindowedMonitor.binned[Scored, WinRow](bins)(
+        e => Iterator.single(binOf(e.value, cutsIx))) { (src, s, n) =>
+        val p = psi(s.counts)
+        WinRow(src, s.win * windowMs, n, p, psi(s.cumCounts), p > psiCeiling)
+      })
   }
 }

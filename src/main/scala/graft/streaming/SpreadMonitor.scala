@@ -1,7 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.Dataset
 import java.sql.Timestamp
 
 /** Streaming variance-ratio monitor — the live twin of
@@ -30,11 +29,12 @@ import java.sql.Timestamp
   *
   * State is O(sources) — three Longs per side per source — and the
   * per-trigger working set is O(windows-in-batch per source), not
-  * O(events): the fold buckets moments per window id directly off the
-  * iterator (within-window order is irrelevant to the sums). Long
-  * accumulation is exact while n·max(x)² stays under 2⁶³ (a 10⁹-event
-  * window of 10⁴-token documents sits at 10¹⁷ — three orders inside);
-  * the emit-time cross products are BigInt and cannot overflow.
+  * O(events): [[WindowedMonitor.runSummed]] buckets moments per window
+  * id directly off the iterator (within-window order is irrelevant to
+  * the sums). Long accumulation is exact while n·max(x)² stays under
+  * 2⁶³ (a 10⁹-event window of 10⁴-token documents sits at 10¹⁷ — three
+  * orders inside); the emit-time cross products are BigInt and cannot
+  * overflow.
   * Windows with n < 2 carry no variance and emit nothing (the batch
   * side nulls the same way).
   */
@@ -69,68 +69,32 @@ object SpreadMonitor extends Serializable {
       val vCur = c2.toDouble / (n.toDouble * (n.toDouble - 1))
       math.floor(vCur / vRef * 10000 + 0.5) / 10000
     }
-    implicit val stateEnc = Encoders.product[MomState]
-    implicit val outEnc = Encoders.product[WinRow]
-    events
-      .groupByKey(_.source)(Encoders.STRING)
-      .flatMapGroupsWithState[MomState, WinRow](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (src: String, batch: Iterator[Scored], state: GroupState[MomState]) =>
-          // Fold the iterator DIRECTLY into per-window moment buckets —
-          // heap per trigger is O(windows-in-batch), not O(events-in-batch)
-          // (ADVICE r17: the previous batch.toSeq.sortBy buffered and
-          // sorted the whole micro-batch). This is arithmetic-identical to
-          // the ts-sorted fold: within a window the moment sums commute,
-          // and closing windows in ascending-window order reproduces the
-          // sorted fold's cumulative prefix exactly. Out-of-order events
-          // older than the open window clamp into it (the KsMonitor
-          // convention: a close-and-reopen would emit duplicate
-          // window_start rows) via effW = max(w, openWin).
-          val byWin = scala.collection.mutable.LongMap
-            .empty[Array[Long]] // (n, s1, s2) per window
-          var minW = Long.MaxValue
-          var nSeen = 0L
-          val openWin0 = state.getOption.map(_.win)
-          batch.foreach { e =>
-            nSeen += 1L
-            val w0 = e.ts.getTime / windowMs
-            val w = openWin0 match {
-              case Some(ow) if w0 < ow => ow
-              case _ => w0
-            }
-            if (w < minW) minW = w
-            val b = byWin.getOrElseUpdate(w, Array(0L, 0L, 0L))
-            b(0) += 1L; b(1) += e.value; b(2) += e.value * e.value
+    // heap per trigger is O(windows-in-batch), not O(events-in-batch)
+    // (ADVICE r17): the core sums each window's moments straight off the
+    // iterator, then folds the sums in ascending window order — within a
+    // window the moment sums commute, so this equals the ts-sorted fold
+    WindowedMonitor.runSummed(events, windowMs)(_.source, _.ts)(
+      () => new Array[Long](3), // (n, Σx, Σx²)
+      (b: Array[Long], e: Scored) => {
+        b(0) += 1L; b(1) += e.value; b(2) += e.value * e.value
+      })(
+      new WindowedMonitor.Stat[Array[Long], MomState, WinRow] {
+        def open(w: Long) = MomState(w, 0L, 0L, 0L, 0L, 0L, 0L)
+        def window(s: MomState) = s.win
+        def add(s: MomState, b: Array[Long]) = MomState(s.win,
+          s.n + b(0), s.s1 + b(1), s.s2 + b(2),
+          s.cumN + b(0), s.cumS1 + b(1), s.cumS2 + b(2))
+        def roll(src: String, s: MomState, w: Long, emit: WinRow => Unit) = {
+          // a window (or cumulative) with n < 2 has no variance —
+          // the batch side nulls there, the monitor stays silent
+          if (s.n >= 2 && s.cumN >= 2) {
+            val r = ratioOf(s.n, s.s1, s.s2)
+            emit(WinRow(src, s.win * windowMs, s.n, r,
+              ratioOf(s.cumN, s.cumS1, s.cumS2),
+              r > ratioCeiling || r * ratioCeiling < 1.0))
           }
-          if (nSeen == 0L) Iterator.empty
-          else {
-            var st = state.getOption.getOrElse(
-              MomState(minW, 0L, 0L, 0L, 0L, 0L, 0L))
-            val out = scala.collection.mutable.ArrayBuffer.empty[WinRow]
-            def close(s: MomState): Unit = {
-              // a window (or cumulative) with n < 2 has no variance —
-              // the batch side nulls there, the monitor stays silent
-              if (s.n >= 2 && s.cumN >= 2) {
-                val r = ratioOf(s.n, s.s1, s.s2)
-                out += WinRow(src, s.win * windowMs, s.n, r,
-                  ratioOf(s.cumN, s.cumS1, s.cumS2),
-                  r > ratioCeiling || r * ratioCeiling < 1.0)
-              }
-            }
-            byWin.keys.toArray.sorted.foreach { w =>
-              if (w > st.win) {
-                close(st)
-                st = MomState(w, 0L, 0L, 0L, st.cumN, st.cumS1, st.cumS2)
-              }
-              val b = byWin(w)
-              st = st.copy(
-                n = st.n + b(0), s1 = st.s1 + b(1), s2 = st.s2 + b(2),
-                cumN = st.cumN + b(0), cumS1 = st.cumS1 + b(1),
-                cumS2 = st.cumS2 + b(2))
-            }
-            state.update(st)
-            out.iterator
-          }
-      }
+          MomState(w, 0L, 0L, 0L, s.cumN, s.cumS1, s.cumS2)
+        }
+      })
   }
 }

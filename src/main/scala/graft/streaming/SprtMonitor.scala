@@ -1,7 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.Dataset
 import java.sql.Timestamp
 
 /** Streaming sequential probability ratio test (Wald 1945) on a pass
@@ -24,12 +23,13 @@ import java.sql.Timestamp
   * are driver-precomputed constants, so the state is two counters per
   * source and the llr is exact integer-weighted arithmetic on them.
   *
-  * Ordering: events are processed in event-time order within each
-  * micro-batch; an event arriving LATE relative to the open window
-  * (possible only across batches) clamps into the current window — it
-  * still counts as SPRT evidence, and crucially it can never force a
-  * close, so a decision is only ever emitted on a genuine window
-  * advance with the full window's evidence behind it.
+  * Ordering is [[WindowedMonitor]]'s: events are processed in
+  * event-time order within each micro-batch; an event arriving LATE
+  * relative to the open window (possible only across batches) clamps
+  * into the current window — it still counts as SPRT evidence, and
+  * crucially it can never force a close, so a decision is only ever
+  * emitted on a genuine window advance with the full window's evidence
+  * behind it.
   */
 object SprtMonitor extends Serializable {
 
@@ -59,45 +59,25 @@ object SprtMonitor extends Serializable {
     val lower = math.log(beta / (1 - alpha))
     def llrOf(n: Long, k: Long): Double = k * wPass + (n - k) * wFail
     def round4(v: Double): Double = math.floor(v * 10000 + 0.5) / 10000
-    implicit val stateEnc = Encoders.product[SprtState]
-    implicit val outEnc = Encoders.product[WinRow]
-    trials
-      .groupByKey(_.source)(Encoders.STRING)
-      .flatMapGroupsWithState[SprtState, WinRow](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (src: String, batch: Iterator[Trial], state: GroupState[SprtState]) =>
-          val sorted = batch.toSeq.sortBy(_.ts.getTime)
-          if (sorted.isEmpty) Iterator.empty
+    WindowedMonitor.run(trials, windowMs)(_.source, _.ts)(
+      new WindowedMonitor.Stat[Trial, SprtState, WinRow] {
+        def open(w: Long) = SprtState(w, 0L, 0L)
+        def window(s: SprtState) = s.win
+        def add(s: SprtState, t: Trial) =
+          s.copy(n = s.n + 1, k = if (t.pass) s.k + 1 else s.k)
+        def roll(src: String, s: SprtState, w: Long, emit: WinRow => Unit) =
+          if (s.n == 0) s.copy(win = w)
           else {
-            var st = state.getOption.getOrElse(
-              SprtState(sorted.head.ts.getTime / windowMs, 0L, 0L))
-            val out = scala.collection.mutable.ArrayBuffer.empty[WinRow]
-            def close(s: SprtState): SprtState = {
-              if (s.n == 0) s
-              else {
-                val l = llrOf(s.n, s.k)
-                val decision =
-                  if (l >= upper) "reject_h0"
-                  else if (l <= lower) "accept_h0"
-                  else "continue"
-                out += WinRow(src, s.win * windowMs, s.n, s.k,
-                  round4(l), decision, decision == "reject_h0")
-                // a decided test is over — the monitor starts a new one
-                if (decision == "continue") s else s.copy(n = 0L, k = 0L)
-              }
-            }
-            sorted.foreach { t =>
-              val w = t.ts.getTime / windowMs
-              // an out-of-order event across micro-batches (w < st.win) CLAMPS into
-              // the current window: a close-and-reopen here would emit duplicate
-              // window_start rows and split one window's counts across two emissions
-              if (w > st.win) st = close(st).copy(win = w)
-              st = st.copy(n = st.n + 1,
-                k = if (t.pass) st.k + 1 else st.k)
-            }
-            state.update(st)
-            out.iterator
+            val l = llrOf(s.n, s.k)
+            val decision =
+              if (l >= upper) "reject_h0"
+              else if (l <= lower) "accept_h0"
+              else "continue"
+            emit(WinRow(src, s.win * windowMs, s.n, s.k,
+              round4(l), decision, decision == "reject_h0"))
+            // a decided test is over — the monitor starts a new one
+            if (decision == "continue") s.copy(win = w) else SprtState(w, 0L, 0L)
           }
-      }
+      })
   }
 }

@@ -1,7 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.Dataset
 import java.sql.Timestamp
 
 /** Streaming 1-Wasserstein drift monitor — the live twin of
@@ -23,13 +22,12 @@ import java.sql.Timestamp
   * Calibration (cuts + reference histogram) stays the batch side's job,
   * the X214–X227 division.
   *
-  * State is O(sources × bins) counters — never events.
+  * State is O(sources × bins) counters — never events; the window loop
+  * and the binned state are [[WindowedMonitor]]'s.
   */
 object WassersteinMonitor extends Serializable {
 
   final case class Scored(source: String, ts: Timestamp, value: Double)
-
-  final case class HistState(win: Long, counts: Seq[Long], cumCounts: Seq[Long])
 
   final case class WinRow(
       source: String, window_start: Long, n_events: Long,
@@ -42,14 +40,9 @@ object WassersteinMonitor extends Serializable {
       w1Ceiling: Double,
       windowMs: Long = 3600000L): Dataset[WinRow] = {
     val bins = refCounts.length
-    require(bins > 1 && cuts.length == bins - 1,
-      "need B >= 2 reference bins and B-1 cutpoints")
-    require(cuts.zip(cuts.tail).forall { case (a, b) => a <= b },
-      "cutpoints must be non-decreasing")
-    require(refCounts.forall(_ >= 0) && refCounts.sum > 0,
-      "reference histogram must be non-negative with positive mass")
+    WindowedMonitor.requireCutBins(cuts, refCounts)
     require(w1Ceiling > 0 && windowMs > 0, "positive ceiling and window")
-    val cutsArr = cuts.toArray
+    val cutsIx = cuts.toIndexedSeq
     val nRef: Long = refCounts.sum
     // the batch operator's per-gap walk on the quantized axis: distinct
     // values = bins where EITHER side has mass; gap = index distance;
@@ -78,45 +71,11 @@ object WassersteinMonitor extends Serializable {
       }
       math.floor(s2.toDouble / 1048576 * 10000 + 0.5) / 10000
     }
-    implicit val stateEnc = Encoders.product[HistState]
-    implicit val outEnc = Encoders.product[WinRow]
-    events
-      .groupByKey(_.source)(Encoders.STRING)
-      .flatMapGroupsWithState[HistState, WinRow](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (src: String, batch: Iterator[Scored], state: GroupState[HistState]) =>
-          val sorted = batch.toSeq.sortBy(_.ts.getTime)
-          if (sorted.isEmpty) Iterator.empty
-          else {
-            val zero = Vector.fill(bins)(0L)
-            var st = state.getOption.getOrElse(
-              HistState(sorted.head.ts.getTime / windowMs, zero, zero))
-            val out = scala.collection.mutable.ArrayBuffer.empty[WinRow]
-            def close(s: HistState): Unit = {
-              val n = s.counts.sum
-              if (n > 0) {
-                val d = w1Of(s.counts)
-                out += WinRow(src, s.win * windowMs, n, d, w1Of(s.cumCounts),
-                  d > w1Ceiling)
-              }
-            }
-            sorted.foreach { e =>
-              val w = e.ts.getTime / windowMs
-              // an out-of-order event across micro-batches (w < st.win) CLAMPS into
-              // the current window: a close-and-reopen here would emit duplicate
-              // window_start rows and split one window's counts across two emissions
-              if (w > st.win) {
-                close(st)
-                st = HistState(w, zero, st.cumCounts)
-              }
-              val b = ScoreDriftMonitor.binOf(e.value, cutsArr)
-              st = st.copy(
-                counts = st.counts.updated(b, st.counts(b) + 1L),
-                cumCounts = st.cumCounts.updated(b, st.cumCounts(b) + 1L))
-            }
-            state.update(st)
-            out.iterator
-          }
-      }
+    WindowedMonitor.run(events, windowMs)(_.source, _.ts)(
+      WindowedMonitor.binned[Scored, WinRow](bins)(
+        e => Iterator.single(ScoreDriftMonitor.binOf(e.value, cutsIx))) { (src, s, n) =>
+        val d = w1Of(s.counts)
+        WinRow(src, s.win * windowMs, n, d, w1Of(s.cumCounts), d > w1Ceiling)
+      })
   }
 }

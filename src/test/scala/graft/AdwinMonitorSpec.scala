@@ -1,8 +1,7 @@
 package graft
 
-import graft.streaming.AdwinMonitor
+import graft.streaming.{AdwinMonitor, MonitorReplay}
 import graft.streaming.AdwinMonitor.{DayRow, Ev}
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import java.sql.Timestamp
 
 /** Streaming ADWIN: the exponential histogram loses no mass on a stable
@@ -20,19 +19,10 @@ class AdwinMonitorSpec extends SparkSpec {
   private def events(day: Int, n: Int, tpe: String = "click"): Seq[Ev] =
     (0 until n).map(i => Ev(tpe, at(day, i)))
 
-  private def run(delta: Double)(batches: Seq[Ev]*): Seq[DayRow] = {
-    implicit val sqlCtx = spark.sqlContext
-    val stream = MemoryStream[Ev]
-    val name = s"aw${System.nanoTime()}"
-    val q = AdwinMonitor.monitor(stream.toDS(), delta)
-      .writeStream.format("memory").queryName(name)
-      .outputMode("append").start()
-    try {
-      batches.foreach { b => stream.addData(b: _*); q.processAllAvailable() }
-      spark.table(name).as[DayRow].collect().toSeq
-        .sortBy(r => (r.event_type, r.day))
-    } finally q.stop()
-  }
+  private def run(delta: Double)(batches: Seq[Ev]*): Seq[DayRow] =
+    MonitorReplay.runStreamBatches[Ev, DayRow](spark, batches,
+      ds => AdwinMonitor.monitor(ds, delta))
+      .sortBy(r => (r.event_type, r.day))
 
   test("stable stream: width tracks the day count exactly, never cuts") {
     // 25 closed days of constant 10 — the exponential histogram merges
@@ -86,5 +76,17 @@ class AdwinMonitorSpec extends SparkSpec {
     intercept[IllegalArgumentException] {
       AdwinMonitor.monitor(spark.emptyDataset[Ev], delta = 0.0)
     }
+  }
+
+  test("a late event across batches folds into the open day: no early close, one row per day") {
+    // the scaladoc's promise: an event from an already-closed day folds
+    // into the CURRENT open day's count — day 1 closes once, with the
+    // late event in it, and day 0 never emits a second row
+    val out = run(0.01)(
+      events(0, 10) ++ events(1, 9),
+      Seq(Ev("click", at(0, 99))), // late: day 0 < open day 1
+      events(2, 1)) // genuine advance closes day 1
+    assert(out.map(r => (r.day, r.n, r.width)) == Seq((0L, 10L, 1L), (1L, 10L, 2L)))
+    assert(out.forall(r => r.mean_bp == 100000L && !r.cut))
   }
 }

@@ -1,8 +1,7 @@
 package graft
 
-import graft.streaming.AucMonitor
+import graft.streaming.{AucMonitor, MonitorReplay}
 import graft.streaming.AucMonitor.{Scored, WinRow}
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import java.sql.Timestamp
 
 /** Streaming binned AUC: agreement with the batch Mann-Whitney operator on
@@ -22,22 +21,13 @@ class AucMonitorSpec extends SparkSpec {
   private def run(
       bins: Int, aucFloor: Double = 0.7,
       scoreMin: Double = 0.0, scoreMax: Double = -1.0)(
-      batches: Seq[Scored]*): Seq[WinRow] = {
-    implicit val sqlCtx = spark.sqlContext
-    val stream = MemoryStream[Scored]
-    val name = s"auc${System.nanoTime()}"
-    val q = AucMonitor.monitor(
-      stream.toDS(), scoreMin,
-      if (scoreMax > scoreMin) scoreMax else bins.toDouble,
-      bins, aucFloor, windowMs = HourMs)
-      .writeStream.format("memory").queryName(name)
-      .outputMode("append").start()
-    try {
-      batches.foreach { b => stream.addData(b: _*); q.processAllAvailable() }
-      spark.table(name).as[WinRow].collect().toSeq
-        .sortBy(r => (r.source, r.window_start))
-    } finally q.stop()
-  }
+      batches: Seq[Scored]*): Seq[WinRow] =
+    MonitorReplay.runStreamBatches[Scored, WinRow](spark, batches,
+      ds => AucMonitor.monitor(
+        ds, scoreMin,
+        if (scoreMax > scoreMin) scoreMax else bins.toDouble,
+        bins, aucFloor, windowMs = HourMs))
+      .sortBy(r => (r.source, r.window_start))
 
   test("agrees with the batch operator on bin-quantized scores") {
     // 60 rows over 10 integer bins with within-bin ties and both labels

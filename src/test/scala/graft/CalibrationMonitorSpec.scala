@@ -1,9 +1,8 @@
 package graft
 
 import graft.operators.Quality
-import graft.streaming.CalibrationMonitor
+import graft.streaming.{CalibrationMonitor, MonitorReplay}
 import graft.streaming.CalibrationMonitor.{Pred, WinRow}
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import java.sql.Timestamp
 
@@ -22,20 +21,11 @@ class CalibrationMonitorSpec extends SparkSpec {
 
   private def run(
       bins: Int = 10, ceiling: Long = 10001L)(
-      batches: Seq[Pred]*): Seq[WinRow] = {
-    implicit val sqlCtx = spark.sqlContext
-    val stream = MemoryStream[Pred]
-    val name = s"calmon${System.nanoTime()}"
-    val q = CalibrationMonitor.monitor(
-      stream.toDS(), bins, ceiling, windowMs = HourMs)
-      .writeStream.format("memory").queryName(name)
-      .outputMode("append").start()
-    try {
-      batches.foreach { b => stream.addData(b: _*); q.processAllAvailable() }
-      spark.table(name).as[WinRow].collect().toSeq
-        .sortBy(r => (r.source, r.window_start))
-    } finally q.stop()
-  }
+      batches: Seq[Pred]*): Seq[WinRow] =
+    MonitorReplay.runStreamBatches[Pred, WinRow](spark, batches,
+      ds => CalibrationMonitor.monitor(
+        ds, bins, ceiling, windowMs = HourMs))
+      .sortBy(r => (r.source, r.window_start))
 
   test("rowTerms equals the batch report's integer quantities") {
     val rows = Seq((1L, 4L, false), (3L, 4L, true), (4L, 4L, true),

@@ -1,8 +1,7 @@
 package graft
 
-import graft.streaming.ConformalMonitor
+import graft.streaming.{ConformalMonitor, MonitorReplay}
 import graft.streaming.ConformalMonitor.{Pred, WinRow}
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import java.sql.Timestamp
 
 /** Streaming conformal coverage: agreement with the batch operator on the
@@ -20,21 +19,12 @@ class ConformalMonitorSpec extends SparkSpec {
   private def run(
       slope: Double, intercept: Double, qHat: Double,
       target: Double = 0.9, tolerance: Double = 0.05)(
-      batches: Seq[Pred]*): Seq[WinRow] = {
-    implicit val sqlCtx = spark.sqlContext
-    val stream = MemoryStream[Pred]
-    val name = s"cf${System.nanoTime()}"
-    val q = ConformalMonitor.monitor(
-      stream.toDS(), slope, intercept, qHat, target,
-      windowMs = HourMs, tolerance = tolerance)
-      .writeStream.format("memory").queryName(name)
-      .outputMode("append").start()
-    try {
-      batches.foreach { b => stream.addData(b: _*); q.processAllAvailable() }
-      spark.table(name).as[WinRow].collect().toSeq
-        .sortBy(r => (r.source, r.window_start))
-    } finally q.stop()
-  }
+      batches: Seq[Pred]*): Seq[WinRow] =
+    MonitorReplay.runStreamBatches[Pred, WinRow](spark, batches,
+      ds => ConformalMonitor.monitor(
+        ds, slope, intercept, qHat, target,
+        windowMs = HourMs, tolerance = tolerance))
+      .sortBy(r => (r.source, r.window_start))
 
   test("agrees with the batch operator on the same window") {
     // deterministic frame: y = 3 + 2x + structured residual; rows ≡3 (mod

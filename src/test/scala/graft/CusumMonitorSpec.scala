@@ -1,8 +1,7 @@
 package graft
 
-import graft.streaming.CusumMonitor
+import graft.streaming.{CusumMonitor, MonitorReplay}
 import graft.streaming.CusumMonitor.{DayRow, Ev}
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import java.sql.Timestamp
 
 /** Streaming CUSUM: day-rollover emission, sum accumulation across
@@ -17,19 +16,11 @@ class CusumMonitorSpec extends SparkSpec {
   private def events(day: Int, n: Int, tpe: String = "click"): Seq[Ev] =
     (0 until n).map(i => Ev(tpe, at(day, i)))
 
-  private def run(batches: Seq[Ev]*): Seq[DayRow] = {
-    implicit val sqlCtx = spark.sqlContext
-    val stream = MemoryStream[Ev]
-    val name = s"cu${System.nanoTime()}"
-    // mu = 10, slack 1, threshold 8
-    val q = CusumMonitor.monitor(stream.toDS(), mu = 10.0, slack = 1.0, threshold = 8.0)
-      .writeStream.format("memory").queryName(name)
-      .outputMode("append").start()
-    try {
-      batches.foreach { b => stream.addData(b: _*); q.processAllAvailable() }
-      spark.table(name).as[DayRow].collect().toSeq.sortBy(r => (r.event_type, r.day))
-    } finally q.stop()
-  }
+  // mu = 10, slack 1, threshold 8
+  private def run(batches: Seq[Ev]*): Seq[DayRow] =
+    MonitorReplay.runStreamBatches[Ev, DayRow](spark, batches,
+      ds => CusumMonitor.monitor(ds, mu = 10.0, slack = 1.0, threshold = 8.0))
+      .sortBy(r => (r.event_type, r.day))
 
   test("days emit on rollover with hand-computed sums") {
     val out = run(events(0, 10) ++ events(1, 15) ++ events(2, 1))
@@ -64,5 +55,18 @@ class CusumMonitorSpec extends SparkSpec {
     val byType = out.groupBy(_.event_type)
     assert(byType("a").head.s_up == 9.0 && byType("a").head.s_down == 0.0)
     assert(byType("b").head.s_up == 0.0 && byType("b").head.s_down == 7.0)
+  }
+
+  test("a late event across batches folds into the open day: no early close, one row per day") {
+    // batch 1 closes day 0 and opens day 1; batch 2 delivers one event
+    // stamped on the already-closed day 0 — it must count toward open
+    // day 1, not close day 1 early and reopen day 0 for a second row
+    val out = run(
+      events(0, 10) ++ events(1, 14),
+      Seq(Ev("click", at(0, 99))), // late: day 0 < open day 1
+      events(2, 1)) // genuine advance closes day 1
+    // day 1 closes with c = 15: sUp = max(0, 0 + 15 - 10 - 1) = 4
+    assert(out.map(r => (r.day, r.n, r.s_up)) ==
+      Seq((0L, 10L, 0.0), (1L, 15L, 4.0)))
   }
 }

@@ -1,9 +1,8 @@
 package graft
 
 import graft.operators.{GlobalRank, Quality}
-import graft.streaming.{CvmMonitor, ScoreDriftMonitor}
+import graft.streaming.{CvmMonitor, MonitorReplay, ScoreDriftMonitor}
 import graft.streaming.CvmMonitor.{Scored, WinRow}
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import java.sql.Timestamp
 
@@ -31,20 +30,11 @@ class CvmMonitorSpec extends SparkSpec {
 
   private def run(
       cuts: Seq[Double], refCounts: Seq[Long], ceilingBp: Long = 1000000L)(
-      batches: Seq[Scored]*): Seq[WinRow] = {
-    implicit val sqlCtx = spark.sqlContext
-    val stream = MemoryStream[Scored]
-    val name = s"cvmmon${System.nanoTime()}"
-    val q = CvmMonitor.monitor(
-      stream.toDS(), cuts, refCounts, ceilingBp, windowMs = HourMs)
-      .writeStream.format("memory").queryName(name)
-      .outputMode("append").start()
-    try {
-      batches.foreach { b => stream.addData(b: _*); q.processAllAvailable() }
-      spark.table(name).as[WinRow].collect().toSeq
-        .sortBy(r => (r.source, r.window_start))
-    } finally q.stop()
-  }
+      batches: Seq[Scored]*): Seq[WinRow] =
+    MonitorReplay.runStreamBatches[Scored, WinRow](spark, batches,
+      ds => CvmMonitor.monitor(
+        ds, cuts, refCounts, ceilingBp, windowMs = HourMs))
+      .sortBy(r => (r.source, r.window_start))
 
   test("window CvM equals the batch cramerVonMises on the bin indices") {
     val ref = (0 until 100).map(_.toDouble)

@@ -1,8 +1,7 @@
 package graft
 
-import graft.streaming.DriftMonitor
+import graft.streaming.{DriftMonitor, MonitorReplay}
 import graft.streaming.DriftMonitor.{Doc, WinRow}
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import java.sql.Timestamp
 
@@ -39,20 +38,11 @@ class DriftMonitorSpec extends SparkSpec {
 
   private def run(
       refCounts: Seq[Long], jsCeiling: Double = 0.2)(
-      batches: Seq[Doc]*): Seq[WinRow] = {
-    implicit val sqlCtx = spark.sqlContext
-    val stream = MemoryStream[Doc]
-    val name = s"drift${System.nanoTime()}"
-    val q = DriftMonitor.monitor(
-      stream.toDS(), refCounts, jsCeiling, windowMs = HourMs)
-      .writeStream.format("memory").queryName(name)
-      .outputMode("append").start()
-    try {
-      batches.foreach { b => stream.addData(b: _*); q.processAllAvailable() }
-      spark.table(name).as[WinRow].collect().toSeq
-        .sortBy(r => (r.source, r.window_start))
-    } finally q.stop()
-  }
+      batches: Seq[Doc]*): Seq[WinRow] =
+    MonitorReplay.runStreamBatches[Doc, WinRow](spark, batches,
+      ds => DriftMonitor.monitor(
+        ds, refCounts, jsCeiling, windowMs = HourMs))
+      .sortBy(r => (r.source, r.window_start))
 
   test("bucket draw and tokenizer match the batch expressions") {
     val toks = Seq("the", "quick", "brown", "fox", "Árvíz", "naïve",

@@ -284,6 +284,21 @@ class GlobalRankSpec extends SparkSpec {
     spark.catalog.clearCache()
   }
 
+  test("weightedPrefixSumsMulti: an IntegerType weight on a small frame sums like its long cast") {
+    // the local tier folds weights with getLong; a non-long weight must
+    // take the distributed tier under the gate too, not throw there only
+    import spark.implicits._
+    val df = Seq((3.0, 4), (1.0, 2), (2.0, 7), (4.0, 0)).toDF("v", "w")
+    def prefixes(in: org.apache.spark.sql.DataFrame) = {
+      val (out, tots) = GlobalRank.weightedPrefixSumsMulti(in, "v", Seq("w" -> "p"))
+      (out.select("v", "p").as[(Double, Long)].collect().sortBy(_._1).toSeq, tots)
+    }
+    val asInt = prefixes(df)
+    assert(asInt == prefixes(df.withColumn("w", col("w").cast("long"))))
+    assert(asInt == (Seq(1.0 -> 0L, 2.0 -> 2L, 3.0 -> 9L, 4.0 -> 13L), Seq(13L)))
+    spark.catalog.clearCache()
+  }
+
   test("weightedPrefixSums local tier leaves nothing cached") {
     import spark.implicits._
     spark.catalog.clearCache()

@@ -1,9 +1,8 @@
 package graft
 
 import graft.operators.{GlobalRank, Quality}
-import graft.streaming.{KsMonitor, ScoreDriftMonitor}
+import graft.streaming.{KsMonitor, MonitorReplay, ScoreDriftMonitor}
 import graft.streaming.KsMonitor.{Scored, WinRow}
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import java.sql.Timestamp
 
@@ -32,20 +31,11 @@ class KsMonitorSpec extends SparkSpec {
 
   private def run(
       cuts: Seq[Double], refCounts: Seq[Long], ceiling: Double = 10.0)(
-      batches: Seq[Scored]*): Seq[WinRow] = {
-    implicit val sqlCtx = spark.sqlContext
-    val stream = MemoryStream[Scored]
-    val name = s"ksmon${System.nanoTime()}"
-    val q = KsMonitor.monitor(
-      stream.toDS(), cuts, refCounts, ceiling, windowMs = HourMs)
-      .writeStream.format("memory").queryName(name)
-      .outputMode("append").start()
-    try {
-      batches.foreach { b => stream.addData(b: _*); q.processAllAvailable() }
-      spark.table(name).as[WinRow].collect().toSeq
-        .sortBy(r => (r.source, r.window_start))
-    } finally q.stop()
-  }
+      batches: Seq[Scored]*): Seq[WinRow] =
+    MonitorReplay.runStreamBatches[Scored, WinRow](spark, batches,
+      ds => KsMonitor.monitor(
+        ds, cuts, refCounts, ceiling, windowMs = HourMs))
+      .sortBy(r => (r.source, r.window_start))
 
   test("window KS equals the batch ksTest on the bin-quantized samples") {
     val ref = (0 until 100).map(_.toDouble)

@@ -1,9 +1,8 @@
 package graft
 
 import graft.operators.{GlobalRank, Quality}
-import graft.streaming.{KuiperMonitor, KsMonitor, ScoreDriftMonitor}
+import graft.streaming.{KsMonitor, KuiperMonitor, MonitorReplay, ScoreDriftMonitor}
 import graft.streaming.KuiperMonitor.{Scored, WinRow}
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import java.sql.Timestamp
 
@@ -30,20 +29,11 @@ class KuiperMonitorSpec extends SparkSpec {
 
   private def run(
       cuts: Seq[Double], refCounts: Seq[Long], ceiling: Double = 10.0)(
-      batches: Seq[Scored]*): Seq[WinRow] = {
-    implicit val sqlCtx = spark.sqlContext
-    val stream = MemoryStream[Scored]
-    val name = s"kuipmon${System.nanoTime()}"
-    val q = KuiperMonitor.monitor(
-      stream.toDS(), cuts, refCounts, ceiling, windowMs = HourMs)
-      .writeStream.format("memory").queryName(name)
-      .outputMode("append").start()
-    try {
-      batches.foreach { b => stream.addData(b: _*); q.processAllAvailable() }
-      spark.table(name).as[WinRow].collect().toSeq
-        .sortBy(r => (r.source, r.window_start))
-    } finally q.stop()
-  }
+      batches: Seq[Scored]*): Seq[WinRow] =
+    MonitorReplay.runStreamBatches[Scored, WinRow](spark, batches,
+      ds => KuiperMonitor.monitor(
+        ds, cuts, refCounts, ceiling, windowMs = HourMs))
+      .sortBy(r => (r.source, r.window_start))
 
   test("window V equals the batch kuiperTest on the bin-quantized samples") {
     val ref = (0 until 100).map(_.toDouble)
@@ -73,24 +63,16 @@ class KuiperMonitorSpec extends SparkSpec {
     val ev = window.zipWithIndex.map { case (v, i) => Scored("s", at(0, i), v) }
     val out = run(cuts, refCounts, ceiling = 0.3)(
       ev, Seq(Scored("s", at(1, 0), 0.0)))
-    implicit val sqlCtx = spark.sqlContext
-    val ksStream = MemoryStream[KsMonitor.Scored]
-    val ksName = s"ksref${System.nanoTime()}"
-    val ksQ = KsMonitor.monitor(ksStream.toDS(), cuts, refCounts, 10.0, HourMs)
-      .writeStream.format("memory").queryName(ksName)
-      .outputMode("append").start()
-    try {
-      ksStream.addData(window.zipWithIndex.map { case (v, i) =>
-        KsMonitor.Scored("s", at(0, i), v) }: _*)
-      ksStream.addData(KsMonitor.Scored("s", at(1, 0), 0.0))
-      ksQ.processAllAvailable()
-      val ksD = spark.table(ksName).as[KsMonitor.WinRow].collect()
-        .head.ks_d
-      assert(out.head.kuiper_v >= ksD, "V >= D always")
-      assert(out.head.kuiper_v > ksD * 1.5,
-        s"the swap must show in V (${out.head.kuiper_v}) well beyond D ($ksD)")
-      assert(out.head.alarm, "the 0.3 ceiling must trip")
-    } finally ksQ.stop()
+    val ksD = MonitorReplay.runStreamBatches[KsMonitor.Scored, KsMonitor.WinRow](
+      spark,
+      Seq(window.zipWithIndex.map { case (v, i) => KsMonitor.Scored("s", at(0, i), v) } :+
+        KsMonitor.Scored("s", at(1, 0), 0.0)),
+      ds => KsMonitor.monitor(ds, cuts, refCounts, 10.0, HourMs))
+      .head.ks_d
+    assert(out.head.kuiper_v >= ksD, "V >= D always")
+    assert(out.head.kuiper_v > ksD * 1.5,
+      s"the swap must show in V (${out.head.kuiper_v}) well beyond D ($ksD)")
+    assert(out.head.alarm, "the 0.3 ceiling must trip")
   }
 
   test("identical-mix window sits at zero; rollover and cumulative blend") {

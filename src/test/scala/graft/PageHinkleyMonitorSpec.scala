@@ -1,8 +1,7 @@
 package graft
 
-import graft.streaming.PageHinkleyMonitor
+import graft.streaming.{MonitorReplay, PageHinkleyMonitor}
 import graft.streaming.PageHinkleyMonitor.{DayRow, Ev}
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import java.sql.Timestamp
 
 /** Streaming Page–Hinkley: day-rollover emission, running-minimum
@@ -21,19 +20,10 @@ class PageHinkleyMonitorSpec extends SparkSpec {
     (0 until n).map(i => Ev(tpe, at(day, i)))
 
   private def run(mu: Double, delta: Double, lambda: Double)(
-      batches: Seq[Ev]*): Seq[DayRow] = {
-    implicit val sqlCtx = spark.sqlContext
-    val stream = MemoryStream[Ev]
-    val name = s"ph${System.nanoTime()}"
-    val q = PageHinkleyMonitor.monitor(stream.toDS(), mu, delta, lambda)
-      .writeStream.format("memory").queryName(name)
-      .outputMode("append").start()
-    try {
-      batches.foreach { b => stream.addData(b: _*); q.processAllAvailable() }
-      spark.table(name).as[DayRow].collect().toSeq
-        .sortBy(r => (r.event_type, r.day))
-    } finally q.stop()
-  }
+      batches: Seq[Ev]*): Seq[DayRow] =
+    MonitorReplay.runStreamBatches[Ev, DayRow](spark, batches,
+      ds => PageHinkleyMonitor.monitor(ds, mu, delta, lambda))
+      .sortBy(r => (r.event_type, r.day))
 
   test("days emit on rollover with hand-computed PH values") {
     // mu=10, delta=1: day0 c=10 -> m=-1, min=-1, PH=0
@@ -82,5 +72,18 @@ class PageHinkleyMonitorSpec extends SparkSpec {
     val byType = out.groupBy(_.event_type)
     assert(byType("a").head.ph_up == 9.0 && byType("a").head.ph_down == 0.0)
     assert(byType("b").head.ph_up == 0.0 && byType("b").head.ph_down == 7.0)
+  }
+
+  test("a late event across batches folds into the open day: no early close, one row per day") {
+    // batch 2's event is stamped on day 0, already closed by batch 1: it
+    // counts toward open day 1 instead of emitting a partial day 1 row
+    // and reopening day 0 for a second one
+    val out = run(10.0, 1.0, 8.0)(
+      events(0, 10) ++ events(1, 14),
+      Seq(Ev("click", at(0, 99))), // late: day 0 < open day 1
+      events(2, 1)) // genuine advance closes day 1
+    // day0 c=10 -> m=-1, PH=0; day1 c=15 -> m=3, min=-1, PH=4
+    assert(out.map(r => (r.day, r.n, r.ph_up)) ==
+      Seq((0L, 10L, 0.0), (1L, 15L, 4.0)))
   }
 }

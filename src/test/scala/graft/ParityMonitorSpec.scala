@@ -1,8 +1,7 @@
 package graft
 
-import graft.streaming.ParityMonitor
+import graft.streaming.{MonitorReplay, ParityMonitor}
 import graft.streaming.ParityMonitor.{Decision, WinRow}
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import java.sql.Timestamp
 
@@ -21,20 +20,11 @@ class ParityMonitorSpec extends SparkSpec {
 
   private def run(
       groups: Seq[String], ceiling: Long = 10001L)(
-      batches: Seq[Decision]*): Seq[WinRow] = {
-    implicit val sqlCtx = spark.sqlContext
-    val stream = MemoryStream[Decision]
-    val name = s"parity${System.nanoTime()}"
-    val q = ParityMonitor.monitor(
-      stream.toDS(), groups, ceiling, windowMs = HourMs)
-      .writeStream.format("memory").queryName(name)
-      .outputMode("append").start()
-    try {
-      batches.foreach { b => stream.addData(b: _*); q.processAllAvailable() }
-      spark.table(name).as[WinRow].collect().toSeq
-        .sortBy(r => (r.source, r.window_start))
-    } finally q.stop()
-  }
+      batches: Seq[Decision]*): Seq[WinRow] =
+    MonitorReplay.runStreamBatches[Decision, WinRow](spark, batches,
+      ds => ParityMonitor.monitor(
+        ds, groups, ceiling, windowMs = HourMs))
+      .sortBy(r => (r.source, r.window_start))
 
   /** The batch audit's parity gap on (group, pred) rows: decision as a
     * degenerate rational (pred -> 1/1 vs 0/1 against threshold 1/1). */

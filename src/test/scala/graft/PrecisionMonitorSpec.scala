@@ -1,9 +1,8 @@
 package graft
 
 import graft.operators.Quality
-import graft.streaming.PrecisionMonitor
+import graft.streaming.{MonitorReplay, PrecisionMonitor}
 import graft.streaming.PrecisionMonitor.{Scored, WinRow}
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import java.sql.Timestamp
 
@@ -21,21 +20,12 @@ class PrecisionMonitorSpec extends SparkSpec {
 
   private def run(
       thr: Int, pFloor: Long = 0L, rFloor: Long = 0L)(
-      batches: Seq[Scored]*): Seq[WinRow] = {
-    implicit val sqlCtx = spark.sqlContext
-    val stream = MemoryStream[Scored]
-    val name = s"prmon${System.nanoTime()}"
-    val q = PrecisionMonitor.monitor(
-      stream.toDS(), thr, bins = 10,
-      precisionFloorBp = pFloor, recallFloorBp = rFloor, windowMs = HourMs)
-      .writeStream.format("memory").queryName(name)
-      .outputMode("append").start()
-    try {
-      batches.foreach { b => stream.addData(b: _*); q.processAllAvailable() }
-      spark.table(name).as[WinRow].collect().toSeq
-        .sortBy(r => (r.source, r.window_start))
-    } finally q.stop()
-  }
+      batches: Seq[Scored]*): Seq[WinRow] =
+    MonitorReplay.runStreamBatches[Scored, WinRow](spark, batches,
+      ds => PrecisionMonitor.monitor(
+        ds, thr, bins = 10,
+        precisionFloorBp = pFloor, recallFloorBp = rFloor, windowMs = HourMs))
+      .sortBy(r => (r.source, r.window_start))
 
   test("window confusion row equals the batch prCurve row at the shipped threshold") {
     val rnd = new scala.util.Random(42)

@@ -120,4 +120,78 @@ class PushSocketSourceSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  /** Ingest from a collector whose flush gate holds frames until the
+    * oldest is `ageMs` old, so each burst below `flushSize` becomes one
+    * micro-batch. Runs `body(port, name, rowsInLogs)` and stops the query.
+    */
+  private def withGatedCollector(maxQueue: Int, ageMs: Long)(
+      body: (Int, String, () => Seq[String]) => Unit): Unit = {
+    val root = Files.createTempDirectory("graft-pushq").toString
+    val store = new LogStore(s"$root/store")
+    val name = s"queue-${UUID.randomUUID()}"
+    val raw = spark.readStream
+      .format("graft.streaming.PushSocketSourceProvider")
+      .option("name", name)
+      .option("port", "0")
+      .option("maxQueue", maxQueue.toString)
+      .option("flushSize", "1000000")
+      .option("flushAgeMs", ageMs.toString)
+      .load()
+    val q = StreamIngest.start(raw, store, s"$root/ckpt",
+      sourceFlushGated = true)
+    try {
+      val bindDeadline = System.currentTimeMillis() + 15000
+      while (PushSocketSource.boundPort(name).isEmpty &&
+        System.currentTimeMillis() < bindDeadline) Thread.sleep(50)
+      val port = PushSocketSource.boundPort(name)
+        .getOrElse(fail("collector never bound"))
+      def messages(): Seq[String] =
+        scala.util.Try(store.read(spark, "logs")
+          .select("message").as[String].collect().toSeq)
+          .getOrElse(Seq.empty)
+      body(port, name, () => {
+        q.processAllAvailable()
+        messages()
+      })
+    } finally q.stop()
+  }
+
+  /** Poll `rows` until it holds at least `n` rows or 60 s pass. */
+  private def awaitRows(rows: () => Seq[String], n: Int): Seq[String] = {
+    val deadline = System.currentTimeMillis() + 60000
+    var got = rows()
+    while (got.size < n && System.currentTimeMillis() < deadline) {
+      Thread.sleep(200)
+      got = rows()
+    }
+    got
+  }
+
+  test("a 65,536 burst after a finished batch loses nothing at maxQueue 65,536") {
+    // the finished batch's frames stay buffered until the next batch
+    // commits them; the queue bound must count only unreleased frames,
+    // or the burst drops as many frames as that batch read
+    withGatedCollector(maxQueue = 65536, ageMs = 2000L) { (port, name, rows) =>
+      val small = (1 to 10).map(i => s"small-$i")
+      PushSocketSource.send("localhost", port, small.map(record))
+      assert(awaitRows(rows, small.size).toSet == small.toSet)
+      val burst = (1 to 65536).map(i => s"burst-$i")
+      PushSocketSource.send("localhost", port, burst.map(record))
+      val got = awaitRows(rows, small.size + burst.size)
+      assert(PushSocketSource.dropped(name) == 0)
+      assert(got.size == small.size + burst.size)
+      assert(got.toSet == (small ++ burst).toSet)
+    }
+  }
+
+  test("unreleased frames beyond maxQueue are dropped and counted") {
+    withGatedCollector(maxQueue = 50, ageMs = 1000L) { (port, name, rows) =>
+      val sent = (1 to 80).map(i => s"frame-$i")
+      PushSocketSource.send("localhost", port, sent.map(record))
+      val got = awaitRows(rows, 50)
+      // one connection admits in order: the first 50 fit, the last 30 drop
+      assert(got.toSet == sent.take(50).toSet)
+      assert(PushSocketSource.dropped(name) == 30)
+    }
+  }
 }

@@ -1,9 +1,8 @@
 package graft
 
 import graft.operators.Quality
-import graft.streaming.SpreadMonitor
+import graft.streaming.{MonitorReplay, SpreadMonitor}
 import graft.streaming.SpreadMonitor.{Scored, WinRow}
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import java.sql.Timestamp
 
@@ -26,19 +25,11 @@ class SpreadMonitorSpec extends SparkSpec {
   private def run(
       ref: Seq[Long], ceiling: Double = 4.0)(
       batches: Seq[Scored]*): Seq[WinRow] = {
-    implicit val sqlCtx = spark.sqlContext
-    val stream = MemoryStream[Scored]
-    val name = s"spreadmon${System.nanoTime()}"
     val (n, s1, s2) = moments(ref)
-    val q = SpreadMonitor.monitor(
-      stream.toDS(), n, s1, s2, ceiling, windowMs = HourMs)
-      .writeStream.format("memory").queryName(name)
-      .outputMode("append").start()
-    try {
-      batches.foreach { b => stream.addData(b: _*); q.processAllAvailable() }
-      spark.table(name).as[WinRow].collect().toSeq
-        .sortBy(r => (r.source, r.window_start))
-    } finally q.stop()
+    MonitorReplay.runStreamBatches[Scored, WinRow](spark, batches,
+      ds => SpreadMonitor.monitor(
+        ds, n, s1, s2, ceiling, windowMs = HourMs))
+      .sortBy(r => (r.source, r.window_start))
   }
 
   test("window ratio equals the batch varianceRatioTest") {

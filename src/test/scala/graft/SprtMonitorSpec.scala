@@ -1,8 +1,7 @@
 package graft
 
-import graft.streaming.SprtMonitor
+import graft.streaming.{MonitorReplay, SprtMonitor}
 import graft.streaming.SprtMonitor.{Trial, WinRow}
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import java.sql.Timestamp
 
 /** Streaming SPRT: hand-computed LLR agreement, Wald-boundary decisions
@@ -18,20 +17,11 @@ class SprtMonitorSpec extends SparkSpec {
     new Timestamp(win.toLong * HourMs + i * 1000L)
 
   private def run(
-      p0: Double, p1: Double)(batches: Seq[Trial]*): Seq[WinRow] = {
-    implicit val sqlCtx = spark.sqlContext
-    val stream = MemoryStream[Trial]
-    val name = s"sprt${System.nanoTime()}"
-    val q = SprtMonitor.monitor(
-      stream.toDS(), p0, p1, windowMs = HourMs)
-      .writeStream.format("memory").queryName(name)
-      .outputMode("append").start()
-    try {
-      batches.foreach { b => stream.addData(b: _*); q.processAllAvailable() }
-      spark.table(name).as[WinRow].collect().toSeq
-        .sortBy(r => (r.source, r.window_start))
-    } finally q.stop()
-  }
+      p0: Double, p1: Double)(batches: Seq[Trial]*): Seq[WinRow] =
+    MonitorReplay.runStreamBatches[Trial, WinRow](spark, batches,
+      ds => SprtMonitor.monitor(
+        ds, p0, p1, windowMs = HourMs))
+      .sortBy(r => (r.source, r.window_start))
 
   test("window LLR equals the Bernoulli closed form, continue inside the boundaries") {
     val (p0, p1) = (0.2, 0.3)

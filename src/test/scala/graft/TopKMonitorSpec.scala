@@ -1,8 +1,7 @@
 package graft
 
-import graft.streaming.TopKMonitor
+import graft.streaming.{MonitorReplay, TopKMonitor}
 import graft.streaming.TopKMonitor.{KeyedEvent, WinRow}
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import java.sql.Timestamp
 
@@ -21,20 +20,11 @@ class TopKMonitorSpec extends SparkSpec {
 
   private def run(
       k: Int, topM: Int, expected: Set[String], share: Double = 1.0)(
-      batches: Seq[KeyedEvent]*): Seq[WinRow] = {
-    implicit val sqlCtx = spark.sqlContext
-    val stream = MemoryStream[KeyedEvent]
-    val name = s"topk${System.nanoTime()}"
-    val q = TopKMonitor.monitor(
-      stream.toDS(), k, topM, expected, share, windowMs = HourMs)
-      .writeStream.format("memory").queryName(name)
-      .outputMode("append").start()
-    try {
-      batches.foreach { b => stream.addData(b: _*); q.processAllAvailable() }
-      spark.table(name).as[WinRow].collect().toSeq
-        .sortBy(r => (r.source, r.window_start, r.rank))
-    } finally q.stop()
-  }
+      batches: Seq[KeyedEvent]*): Seq[WinRow] =
+    MonitorReplay.runStreamBatches[KeyedEvent, WinRow](spark, batches,
+      ds => TopKMonitor.monitor(
+        ds, k, topM, expected, share, windowMs = HourMs))
+      .sortBy(r => (r.source, r.window_start, r.rank))
 
   /** The batch aggregate over the same keys (single partition preserves
     * the arrival order the monitor sees after its ts sort). */

@@ -1,9 +1,8 @@
 package graft
 
 import graft.operators.{GlobalRank, Quality}
-import graft.streaming.{ScoreDriftMonitor, WassersteinMonitor}
+import graft.streaming.{MonitorReplay, ScoreDriftMonitor, WassersteinMonitor}
 import graft.streaming.WassersteinMonitor.{Scored, WinRow}
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import java.sql.Timestamp
 
@@ -31,20 +30,11 @@ class WassersteinMonitorSpec extends SparkSpec {
 
   private def run(
       cuts: Seq[Double], refCounts: Seq[Long], ceiling: Double = 100.0)(
-      batches: Seq[Scored]*): Seq[WinRow] = {
-    implicit val sqlCtx = spark.sqlContext
-    val stream = MemoryStream[Scored]
-    val name = s"w1mon${System.nanoTime()}"
-    val q = WassersteinMonitor.monitor(
-      stream.toDS(), cuts, refCounts, ceiling, windowMs = HourMs)
-      .writeStream.format("memory").queryName(name)
-      .outputMode("append").start()
-    try {
-      batches.foreach { b => stream.addData(b: _*); q.processAllAvailable() }
-      spark.table(name).as[WinRow].collect().toSeq
-        .sortBy(r => (r.source, r.window_start))
-    } finally q.stop()
-  }
+      batches: Seq[Scored]*): Seq[WinRow] =
+    MonitorReplay.runStreamBatches[Scored, WinRow](spark, batches,
+      ds => WassersteinMonitor.monitor(
+        ds, cuts, refCounts, ceiling, windowMs = HourMs))
+      .sortBy(r => (r.source, r.window_start))
 
   test("window W1 equals the batch wassersteinDistance on the bin-quantized samples") {
     val ref = (0 until 100).map(_.toDouble)
